@@ -34,6 +34,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
 
+from prosearch_spark.session import local_frame
+
 # --------------------------------------------------------------------------
 # 1. white_lower — reference-exact analyzer, JVM-side.
 # --------------------------------------------------------------------------
@@ -360,7 +362,7 @@ def parse_query_lenient(q: str) -> list[tuple[str, object]]:
 def query_terms_df(spark, q: str):
     """[(term, boost)] as a broadcastable one-row-per-clause DataFrame."""
     rows = analyze_query(q)
-    return spark.createDataFrame(rows, "term string, boost double")
+    return local_frame(spark, rows, "term string, boost double")
 
 
 def parse_query_slop(q: str) -> list[tuple[str, object]]:

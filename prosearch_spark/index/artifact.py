@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from prosearch_spark.index.blocks import decode_blocks, encode_blocks
 from prosearch_spark.index.build import InvertedIndex, build_index
+from prosearch_spark.session import local_frame
 
 MANIFEST = "manifest.json"
 VERSION = 1
@@ -87,8 +88,8 @@ def term_buckets_py(terms: list[str], n_buckets: int,
     """
     missing = [t for t in terms if (t, n_buckets) not in _BUCKET_MEMO]
     if missing:
-        rows = spark.createDataFrame(
-            [(t,) for t in missing], "term string"
+        rows = local_frame(
+            spark, [(t,) for t in missing], "term string"
         ).select("term", term_bucket(F.col("term"), n_buckets).alias("b")
                  ).collect()
         for r in rows:
@@ -162,8 +163,8 @@ class IndexArtifact:
     def stats(self) -> DataFrame:
         """One-row (n_docs, avgdl) frame from the manifest (broadcast
         scalar analog of per-segment collection stats)."""
-        return self.spark.createDataFrame(
-            [(self.manifest["n_docs"], self.manifest["avgdl"])],
+        return local_frame(
+            self.spark, [(self.manifest["n_docs"], self.manifest["avgdl"])],
             "n_docs long, avgdl double",
         )
 
@@ -492,7 +493,7 @@ def _write_artifact(spark: SparkSession, path: str, postings: DataFrame,
         except Exception:
             # empty corpus: the blocks dir has no part files to infer
             # from
-            ts = spark.createDataFrame([], "tb int, term string, df long")
+            ts = local_frame(spark, [], "tb int, term string, df long")
         (
             ts.select("term", "df", "tb")
             .repartition("tb").sortWithinPartitions("term")

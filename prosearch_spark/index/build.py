@@ -37,6 +37,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from prosearch_spark.analyzer import code_tokens, white_lower_tokens
+from prosearch_spark.session import local_frame
 
 
 @dataclass
@@ -126,7 +127,7 @@ def _code_token_stream(docs: DataFrame, text_col: str, id_col: str,
     stop_rows = [
         (lg, w) for lg, ws in LANG_STOPWORDS.items() for w in sorted(ws)
     ]
-    stop_df = spark.createDataFrame(stop_rows, "_lang string, term string")
+    stop_df = local_frame(spark, stop_rows, "_lang string, term string")
     b = (
         raw.filter(~F.col("_raw").rlike(_UNCHANGED_RE))
         .select(

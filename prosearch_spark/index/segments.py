@@ -51,6 +51,7 @@ from prosearch_spark.index.artifact import (
 )
 from prosearch_spark.index.build import InvertedIndex
 from prosearch_spark.index.locks import exclusive_writer_lock
+from prosearch_spark.session import local_frame
 
 POINTER = "SEGMENTS.json"
 
@@ -356,8 +357,8 @@ class SegmentedIndex:
         # exact integer sums -> the identical float division the
         # single-artifact save performs
         avgdl = total_dl / n_docs if n_docs else 0.0
-        stats = self.spark.createDataFrame(
-            [(n_docs, float(avgdl))], "n_docs long, avgdl double"
+        stats = local_frame(
+            self.spark, [(n_docs, float(avgdl))], "n_docs long, avgdl double"
         )
         return InvertedIndex(postings=postings, term_stats=term_stats,
                              stats=stats)
@@ -814,8 +815,8 @@ class SegmentedArtifactView:
         else:
             n_docs, total_dl = self._n_docs, self._total_dl
         avgdl = total_dl / n_docs if n_docs else 0.0
-        return self._spark.createDataFrame(
-            [(n_docs, float(avgdl))], "n_docs long, avgdl double")
+        return local_frame(
+            self._spark, [(n_docs, float(avgdl))], "n_docs long, avgdl double")
 
     def doc_store(self) -> DataFrame | None:
         """Union of the per-segment doc stores (S4), minus each

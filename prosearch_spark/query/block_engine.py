@@ -32,6 +32,7 @@ from prosearch_spark.index.artifact import IndexArtifact, apply_deletes
 from prosearch_spark.index.blocks import decode_blocks
 from prosearch_spark.index.build import InvertedIndex
 from prosearch_spark.query.engine import SearchEngine
+from prosearch_spark.session import local_frame
 
 
 def block_key(df: DataFrame, *lead: str) -> list[str]:
@@ -145,7 +146,7 @@ class BlockSearchEngine:
         if not terms:
             from prosearch_spark.query.engine import MULTI_TOPK_SCHEMA
 
-            return self.spark.createDataFrame([], MULTI_TOPK_SCHEMA)
+            return local_frame(self.spark, [], MULTI_TOPK_SCHEMA)
         postings = apply_deletes(decode_blocks(self.artifact.blocks(terms)),
                                  self.artifact.deletes())
         idx = InvertedIndex(postings=postings,
@@ -166,7 +167,7 @@ class BlockSearchEngine:
         if not terms:
             from prosearch_spark.query.engine import MULTI_TOPK_SCHEMA
 
-            return self.spark.createDataFrame([], MULTI_TOPK_SCHEMA)
+            return local_frame(self.spark, [], MULTI_TOPK_SCHEMA)
         postings = apply_deletes(decode_blocks(self.artifact.blocks(terms)),
                                  self.artifact.deletes())
         idx = InvertedIndex(postings=postings,
@@ -351,8 +352,8 @@ class BlockSearchEngine:
                     .orderBy(F.desc("ub"), F.asc("first_doc"))
                     .limit(B).collect()
                 ]
-                ranges_df = self.spark.createDataFrame(
-                    ranges, "rf long, rl long"
+                ranges_df = local_frame(
+                    self.spark, ranges, "rf long, rl long"
                 )
                 seed_blocks = meta.join(
                     F.broadcast(ranges_df),
@@ -373,10 +374,7 @@ class BlockSearchEngine:
                     from prosearch_spark.query.engine import TOPK_SCHEMA
 
                     n_seed = seed_blocks.count()
-                    out = (self.spark.createDataFrame(seed_rows,
-                                                      TOPK_SCHEMA)
-                           if seed_rows else
-                           self.spark.createDataFrame([], TOPK_SCHEMA))
+                    out = local_frame(self.spark, seed_rows, TOPK_SCHEMA)
                     return out, {"blocks_total": n_blocks,
                                  "blocks_decoded": n_seed,
                                  "blocks_seed": n_seed, "blocks_final": 0}
@@ -559,7 +557,7 @@ class BlockSearchEngine:
         for t, b in clauses:
             weights[t] += b
         if not terms:
-            return (self.spark.createDataFrame([], TOPK_SCHEMA),
+            return (local_frame(self.spark, [], TOPK_SCHEMA),
                     {"blocks_total": 0, "blocks_decoded": 0})
         if min_prune_blocks is None:
             min_prune_blocks = WAND_OR_MIN_PRUNE_BLOCKS
@@ -590,7 +588,7 @@ class BlockSearchEngine:
         try:
             n_blocks = meta.count()
             if n_blocks == 0:
-                return (self.spark.createDataFrame([], TOPK_SCHEMA),
+                return (local_frame(self.spark, [], TOPK_SCHEMA),
                         {"blocks_total": 0, "blocks_decoded": 0})
             if n_blocks < min_prune_blocks:
                 out = materialize_topk(
@@ -610,8 +608,8 @@ class BlockSearchEngine:
                     .orderBy(F.desc("wub"), F.asc("first_doc"))
                     .limit(B).collect()
                 ]
-                ranges_df = self.spark.createDataFrame(
-                    ranges, "rf long, rl long")
+                ranges_df = local_frame(
+                    self.spark, ranges, "rf long, rl long")
                 seed_blocks = meta.join(
                     F.broadcast(ranges_df),
                     (F.col("first_doc") <= F.col("rl"))
@@ -622,10 +620,7 @@ class BlockSearchEngine:
                 seed_rows = _topk_or(seed_blocks, rt).collect()
                 if covers_all:
                     n_seed = seed_blocks.count()
-                    out = (self.spark.createDataFrame(seed_rows,
-                                                      TOPK_SCHEMA)
-                           if seed_rows else
-                           self.spark.createDataFrame([], TOPK_SCHEMA))
+                    out = local_frame(self.spark, seed_rows, TOPK_SCHEMA)
                     return out, {"blocks_total": n_blocks,
                                  "blocks_decoded": n_seed,
                                  "blocks_seed": n_seed,
@@ -774,7 +769,7 @@ class BlockSearchEngine:
                 "the analyzed text column) for the S5 seed fetch")
         rows = (store.filter(F.col("doc_id") == seed_doc_id)
                 .select(text_col).collect())
-        empty = (self.spark.createDataFrame([], TOPK_SCHEMA),
+        empty = (local_frame(self.spark, [], TOPK_SCHEMA),
                  {"blocks_total": 0, "blocks_decoded": 0})
         if not rows or rows[0][0] is None:
             return empty
@@ -782,8 +777,8 @@ class BlockSearchEngine:
         tf = Counter(white_lower_py(rows[0][0]))
         if not tf:
             return empty
-        seed_tf = self.spark.createDataFrame(
-            [(t, int(c)) for t, c in sorted(tf.items())],
+        seed_tf = local_frame(
+            self.spark, [(t, int(c)) for t, c in sorted(tf.items())],
             "term string, tf long")
         sel = (
             self.artifact.term_stats(sorted(tf))
@@ -853,12 +848,13 @@ class BlockSearchEngine:
             for r in srows if r[text_col] is not None
             for t, c in sorted(Counter(white_lower_py(r[text_col])).items())
         ]
-        empty = self.spark.createDataFrame(
-            [], "query_id long, rank int, doc_id long, score double")
+        empty = local_frame(
+            self.spark, [],
+            "query_id long, rank int, doc_id long, score double")
         if not tf_rows:
             return empty
-        seed_tf = self.spark.createDataFrame(
-            tf_rows, "query_id long, term string, tf long")
+        seed_tf = local_frame(
+            self.spark, tf_rows, "query_id long, term string, tf long")
         vocab = sorted({t for _q, t, _c in tf_rows})
         sel_rows = (
             self.artifact.term_stats(vocab)
@@ -877,8 +873,8 @@ class BlockSearchEngine:
             return empty
         terms = sorted({r["term"] for r in sel_rows})
         eng = self._engine_on_blocks(self.artifact.blocks(terms), terms)
-        sel = self.spark.createDataFrame(
-            [(int(r["query_id"]), r["term"]) for r in sel_rows],
+        sel = local_frame(
+            self.spark, [(int(r["query_id"]), r["term"]) for r in sel_rows],
             "query_id long, term string")
         return eng._multi_mlt_rank(sel, k, round_to)
 
@@ -1100,7 +1096,7 @@ class BlockSearchEngine:
 
         clauses = parse_query_lenient(q)
         if not clauses:
-            return _ret(self.spark.createDataFrame([], TOPK_SCHEMA),
+            return _ret(local_frame(self.spark, [], TOPK_SCHEMA),
                         {"blocks_total": 0, "blocks_decoded": 0})
         term_clauses = [c for kind, c in clauses if kind == "term"]
         phrase_clauses = [c for kind, c in clauses if kind == "phrase"]
@@ -1115,7 +1111,7 @@ class BlockSearchEngine:
                for r in self.artifact.term_stats(all_terms).collect()}
         if any(t not in dfs for t in all_terms):
             # a clause term with zero postings -> conjunction is empty
-            return _ret(self.spark.createDataFrame([], TOPK_SCHEMA),
+            return _ret(local_frame(self.spark, [], TOPK_SCHEMA),
                         {"blocks_total": 0, "blocks_decoded": 0})
 
         def _ranges_of(term: str) -> DataFrame:
@@ -1177,7 +1173,7 @@ class BlockSearchEngine:
                 if not ids:
                     # first phrase matches nothing -> conjunction dead
                     return _ret(
-                        self.spark.createDataFrame([], TOPK_SCHEMA),
+                        local_frame(self.spark, [], TOPK_SCHEMA),
                         {"blocks_total": blocks.count()
                          if return_stats else 0,
                          "blocks_decoded": 0},
@@ -1195,8 +1191,8 @@ class BlockSearchEngine:
                             lo = d
                         prev = d
                     ranges.append((lo, prev))
-                    ranges_df = self.spark.createDataFrame(
-                        ranges, "rf long, rl long"
+                    ranges_df = local_frame(
+                        self.spark, ranges, "rf long, rl long"
                     )
                     tc_needed = tblocks.join(
                         F.broadcast(ranges_df),
@@ -1281,7 +1277,7 @@ class BlockSearchEngine:
 
         clauses = parse_query_slop(q)
         if not clauses:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(self.spark, [], TOPK_SCHEMA)
         all_terms = sorted(
             {t for kind, c in clauses if kind == "term"
              for t in [c[0]]}
@@ -1363,7 +1359,7 @@ class BlockSearchEngine:
                     by_len.setdefault(len(payload), []).append(
                         (qi, ci, list(payload)))
         if not term_rows and not by_len and not by_len_slop:
-            return self.spark.createDataFrame([], MULTI_TOPK_SCHEMA)
+            return local_frame(self.spark, [], MULTI_TOPK_SCHEMA)
 
         all_terms = sorted({t for _q, _c, t, _b in term_rows}
                            | {t for g in by_len.values()
@@ -1379,8 +1375,8 @@ class BlockSearchEngine:
             stats = self.artifact.stats()
             parts: list[DataFrame] = []
             if term_rows:
-                qdf = self.spark.createDataFrame(
-                    term_rows,
+                qdf = local_frame(
+                    self.spark, term_rows,
                     "query_id int, clause_id int, term string, "
                     "boost double")
                 ts = self.artifact.term_stats(
@@ -1397,8 +1393,8 @@ class BlockSearchEngine:
                 slot_rows = [(qi, ci, i, t)
                              for qi, ci, terms_p in group
                              for i, t in enumerate(terms_p)]
-                slots = self.spark.createDataFrame(
-                    slot_rows,
+                slots = local_frame(
+                    self.spark, slot_rows,
                     "query_id int, clause_id int, slot int, term string")
                 def _shifted(by: int):
                     # NB: single-parameter lambda — F.transform binds
@@ -1454,11 +1450,11 @@ class BlockSearchEngine:
                 slot_rows = [(qi, ci, i, t)
                              for qi, ci, terms_p, _w in group
                              for i, t in enumerate(terms_p)]
-                slots = self.spark.createDataFrame(
-                    slot_rows,
+                slots = local_frame(
+                    self.spark, slot_rows,
                     "query_id int, clause_id int, slot int, term string")
-                wdf = self.spark.createDataFrame(
-                    [(qi, ci, w) for qi, ci, _ts, w in group],
+                wdf = local_frame(
+                    self.spark, [(qi, ci, w) for qi, ci, _ts, w in group],
                     "query_id int, clause_id int, w int")
                 sides = []
                 for i in range(n):
@@ -1502,8 +1498,8 @@ class BlockSearchEngine:
                     .select("query_id", "clause_id", "doc_id", "s")
                 )
             scored = reduce(lambda a, b: a.unionByName(b), parts)
-            ndf = self.spark.createDataFrame(
-                [(qi, len(cls)) for qi, cls in parsed if cls],
+            ndf = local_frame(
+                self.spark, [(qi, len(cls)) for qi, cls in parsed if cls],
                 "query_id int, n_clauses int")
             # duplicate clauses carry distinct clause_ids, so the
             # DISTINCT count equals the clause count exactly when

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from prosearch_spark.analyzer import analyze_query
 from prosearch_spark.index.build import InvertedIndex
 from prosearch_spark.query.bm25 import MLT_TERM_EXPR, SCORE_EXPR
+from prosearch_spark.session import local_frame
 
 
 def rank_topk(d: DataFrame, k: int, round_to: int | None) -> DataFrame:
@@ -54,9 +55,7 @@ def materialize_topk(spark: SparkSession, ranked: DataFrame,
     ``schema`` defaults to the single-query TOPK_SCHEMA; batched
     callers pass MULTI_TOPK_SCHEMA."""
     schema = schema if schema is not None else TOPK_SCHEMA
-    rows = ranked.collect()
-    return spark.createDataFrame(rows, schema) if rows else \
-        spark.createDataFrame([], schema)
+    return local_frame(spark, ranked.collect(), schema)
 
 
 class SearchEngine:
@@ -77,7 +76,7 @@ class SearchEngine:
         the analyzer's boost table must NOT apply."""
         if clauses is None:
             clauses = analyze_query(q)
-        qdf = self.spark.createDataFrame(clauses, "term string, boost double")
+        qdf = local_frame(self.spark, clauses, "term string, boost double")
         terms = sorted({t for t, _ in clauses})
         ts = self.index.term_stats.filter(F.col("term").isin(terms))
         scored = (
@@ -162,7 +161,7 @@ class SearchEngine:
         )
         clauses = [(r["term"], 1.0) for r in sel.select("term").collect()]
         if not clauses:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(self.spark, [], TOPK_SCHEMA)
         d = (self._docs_scored_or("", clauses=clauses)
              .filter(F.col("doc_id") != seed_doc_id))
         return rank_topk(d, k, round_to)
@@ -298,11 +297,11 @@ class SearchEngine:
         parsed = [(qi, analyze_query(q)) for qi, q in enumerate(queries)]
         rows = [(qi, t, b) for qi, cl in parsed for t, b in cl]
         if not rows:
-            return self.spark.createDataFrame([], MULTI_TOPK_SCHEMA)
-        qdf = self.spark.createDataFrame(
-            rows, "query_id int, term string, boost double")
-        ndf = self.spark.createDataFrame(
-            [(qi, len(cl)) for qi, cl in parsed if cl],
+            return local_frame(self.spark, [], MULTI_TOPK_SCHEMA)
+        qdf = local_frame(
+            self.spark, rows, "query_id int, term string, boost double")
+        ndf = local_frame(
+            self.spark, [(qi, len(cl)) for qi, cl in parsed if cl],
             "query_id int, n_clauses int")
         terms = sorted({t for _qi, t, _b in rows})
         ts = self.index.term_stats.filter(F.col("term").isin(terms))
@@ -372,9 +371,7 @@ class SearchEngine:
             )
             # materialize before unpersist so the caller's DataFrame
             # doesn't recompute the whole match
-            rows = out.collect()
-            result = self.spark.createDataFrame(rows, out.schema) if rows \
-                else self.spark.createDataFrame([], out.schema)
+            result = local_frame(self.spark, out.collect(), out.schema)
         finally:
             d.unpersist()
         return result, total

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from prosearch_spark.analyzer import analyze_query, parse_query_lenient
 from prosearch_spark.index.build import InvertedIndex
 from prosearch_spark.query.bm25 import SCORE_EXPR
+from prosearch_spark.session import local_frame
 
 DEFAULT_FIELD_BOOSTS = {"title": 1.5, "body": 1.0}
 
@@ -64,8 +65,8 @@ class FieldedSearchEngine:
     def _scored(self, q: str) -> tuple[DataFrame, int]:
         """Per-(clause, field, doc) scored rows + clause count."""
         clauses = analyze_query(q)
-        qdf = self.spark.createDataFrame(
-            [(i, t, b) for i, (t, b) in enumerate(clauses)],
+        qdf = local_frame(
+            self.spark, [(i, t, b) for i, (t, b) in enumerate(clauses)],
             "clause_id int, term string, boost double",
         )
         terms = sorted({t for t, _ in clauses})
@@ -148,11 +149,12 @@ class FieldedSearchEngine:
         rows = [(qi, ci, t, b) for qi, cl in parsed
                 for ci, (t, b) in enumerate(cl)]
         if not rows:
-            return self.spark.createDataFrame([], MULTI_TOPK_SCHEMA)
-        qdf = self.spark.createDataFrame(
-            rows, "query_id int, clause_id int, term string, boost double")
-        ndf = self.spark.createDataFrame(
-            [(qi, len(cl)) for qi, cl in parsed if cl],
+            return local_frame(self.spark, [], MULTI_TOPK_SCHEMA)
+        qdf = local_frame(
+            self.spark, rows,
+            "query_id int, clause_id int, term string, boost double")
+        ndf = local_frame(
+            self.spark, [(qi, len(cl)) for qi, cl in parsed if cl],
             "query_id int, n_clauses int")
         terms = sorted({t for _qi, _ci, t, _b in rows})
         ts = self.index.term_stats.filter(F.col("term").isin(terms))
@@ -267,7 +269,7 @@ class FieldedBlockSearchEngine:
         if not terms:
             from prosearch_spark.query.engine import MULTI_TOPK_SCHEMA
 
-            return self.spark.createDataFrame([], MULTI_TOPK_SCHEMA)
+            return local_frame(self.spark, [], MULTI_TOPK_SCHEMA)
         idx = fielded_index_from_artifacts(self.artifacts, "",
                                            terms=terms)
         return FieldedSearchEngine(
@@ -404,7 +406,7 @@ class FieldedBlockSearchEngine:
         if any(dfs_total[t] == 0 for t in terms):
             # a clause with zero postings in EVERY field: conjunction
             # is empty by the same rule as the flat engine
-            return (self.spark.createDataFrame([], TOPK_SCHEMA),
+            return (local_frame(self.spark, [], TOPK_SCHEMA),
                     {"blocks_total": 0, "blocks_decoded": 0})
         meta = metas[0]
         for m in metas[1:]:
@@ -421,7 +423,7 @@ class FieldedBlockSearchEngine:
             n_blocks = sum(r["n"] for r in cnt_rows)
             n_rarest = sum(r["n"] for r in cnt_rows if r["is_r"])
             if n_blocks == 0:
-                return (self.spark.createDataFrame([], TOPK_SCHEMA),
+                return (local_frame(self.spark, [], TOPK_SCHEMA),
                         {"blocks_total": 0, "blocks_decoded": 0})
             if n_blocks < min_prune_blocks:
                 out = materialize_topk(
@@ -445,8 +447,8 @@ class FieldedBlockSearchEngine:
                              F.asc("field"))
                     .limit(B).collect()
                 ]
-                ranges_df = self.spark.createDataFrame(
-                    ranges, "rf long, rl long"
+                ranges_df = local_frame(
+                    self.spark, ranges, "rf long, rl long"
                 )
                 seed_blocks = meta.join(
                     F.broadcast(ranges_df),
@@ -459,9 +461,7 @@ class FieldedBlockSearchEngine:
                 seed_rows = self._engine_on_blocks(seed_blocks, terms) \
                     .topk(q, k, round_to=rt).collect()
                 if covers_all:
-                    out = (self.spark.createDataFrame(seed_rows, TOPK_SCHEMA)
-                           if seed_rows else
-                           self.spark.createDataFrame([], TOPK_SCHEMA))
+                    out = local_frame(self.spark, seed_rows, TOPK_SCHEMA)
                     return out, {"blocks_total": n_blocks,
                                  "blocks_decoded": n_seed,
                                  "blocks_seed": n_seed, "blocks_final": 0}
@@ -632,7 +632,7 @@ class FieldedBlockSearchEngine:
         for t, b in clauses:
             weights[t] += b
         if not terms:
-            return (self.spark.createDataFrame([], TOPK_SCHEMA),
+            return (local_frame(self.spark, [], TOPK_SCHEMA),
                     {"blocks_total": 0, "blocks_decoded": 0})
 
         w_expr = None
@@ -671,7 +671,7 @@ class FieldedBlockSearchEngine:
         try:
             n_blocks = meta.count()
             if n_blocks == 0:
-                return (self.spark.createDataFrame([], TOPK_SCHEMA),
+                return (local_frame(self.spark, [], TOPK_SCHEMA),
                         {"blocks_total": 0, "blocks_decoded": 0})
             if n_blocks < min_prune_blocks:
                 out = materialize_topk(self.spark, _topk_or(meta, round_to))
@@ -691,8 +691,8 @@ class FieldedBlockSearchEngine:
                              F.asc("field"))
                     .limit(B).collect()
                 ]
-                ranges_df = self.spark.createDataFrame(
-                    ranges, "rf long, rl long")
+                ranges_df = local_frame(
+                    self.spark, ranges, "rf long, rl long")
                 seed_blocks = meta.join(
                     F.broadcast(ranges_df),
                     (F.col("first_doc") <= F.col("rl"))
@@ -703,10 +703,7 @@ class FieldedBlockSearchEngine:
                 rt = round_to if covers_all else None
                 seed_rows = _topk_or(seed_blocks, rt).collect()
                 if covers_all:
-                    out = (self.spark.createDataFrame(seed_rows,
-                                                      TOPK_SCHEMA)
-                           if seed_rows else
-                           self.spark.createDataFrame([], TOPK_SCHEMA))
+                    out = local_frame(self.spark, seed_rows, TOPK_SCHEMA)
                     return out, {"blocks_total": n_blocks,
                                  "blocks_decoded": n_seed,
                                  "blocks_seed": n_seed,
@@ -883,7 +880,7 @@ class FieldedBlockSearchEngine:
 
         clauses = parse_query_slop(q)
         if not clauses:
-            return _ret(self.spark.createDataFrame([], TOPK_SCHEMA),
+            return _ret(local_frame(self.spark, [], TOPK_SCHEMA),
                         {"blocks_total": 0, "blocks_decoded": 0})
         n_clauses = len(clauses)
         term_clauses = [(i, c) for i, (kind, c) in enumerate(clauses)
@@ -956,7 +953,7 @@ class FieldedBlockSearchEngine:
                     # a phrase term absent from body: conjunction dead
                     if term_clauses:
                         totals.append(_tagged_term_blocks())
-                    return _ret(self.spark.createDataFrame([], TOPK_SCHEMA),
+                    return _ret(local_frame(self.spark, [], TOPK_SCHEMA),
                                 _stats())
                 pieces: list[DataFrame] = []
                 for _, terms_p in phrase_clauses:
@@ -997,7 +994,7 @@ class FieldedBlockSearchEngine:
                     # conjunction dead: one clause matches nothing
                     if term_clauses:
                         totals.append(_tagged_term_blocks())
-                    return _ret(self.spark.createDataFrame([], TOPK_SCHEMA),
+                    return _ret(local_frame(self.spark, [], TOPK_SCHEMA),
                                 _stats())
                 s = phrase_scores(m, phrase_df, body_stats)
                 if body_boost != 1.0:
@@ -1006,8 +1003,8 @@ class FieldedBlockSearchEngine:
                     s.select(F.lit(ci).cast("int").alias("clause_id"),
                              "doc_id", "s"))
             if term_clauses:
-                qdf = self.spark.createDataFrame(
-                    [(i, t, b) for i, (t, b) in term_clauses],
+                qdf = local_frame(
+                    self.spark, [(i, t, b) for i, (t, b) in term_clauses],
                     "clause_id int, term string, boost double",
                 )
                 tagged = _tagged_term_blocks()
@@ -1037,8 +1034,8 @@ class FieldedBlockSearchEngine:
                                 lo = d_
                             prev = d_
                         ranges.append((lo, prev))
-                        ranges_df = self.spark.createDataFrame(
-                            ranges, "rf long, rl long")
+                        ranges_df = local_frame(
+                            self.spark, ranges, "rf long, rl long")
                         need = _overlap_semi(tagged, ranges_df)
                 decoded.append(need)
                 # _engine_on_blocks supplies the artifacts'
@@ -1125,7 +1122,7 @@ class FieldedBlockSearchEngine:
                     by_len.setdefault(len(payload), []).append(
                         (qi, ci, list(payload)))
         if not term_rows and not by_len and not by_len_slop:
-            return self.spark.createDataFrame([], MULTI_TOPK_SCHEMA)
+            return local_frame(self.spark, [], MULTI_TOPK_SCHEMA)
 
         persisted: list[DataFrame] = []
         parts: list[DataFrame] = []
@@ -1143,8 +1140,8 @@ class FieldedBlockSearchEngine:
                 tagged = reduce(lambda a, b: a.unionByName(b),
                                 _align_seg(frames))
                 idx = self._engine_on_blocks(tagged, terms).index
-                qdf = self.spark.createDataFrame(
-                    term_rows,
+                qdf = local_frame(
+                    self.spark, term_rows,
                     "query_id int, clause_id int, term string, "
                     "boost double")
                 fb = field_boost_expr(self.field_boosts)
@@ -1186,8 +1183,8 @@ class FieldedBlockSearchEngine:
                     slot_rows = [(qi, ci, i, t)
                                  for qi, ci, terms_p in group
                                  for i, t in enumerate(terms_p)]
-                    slots = self.spark.createDataFrame(
-                        slot_rows, "query_id int, clause_id int, "
+                    slots = local_frame(
+                        self.spark, slot_rows, "query_id int, clause_id int, "
                         "slot int, term string")
 
                     def _shifted(by: int):
@@ -1237,11 +1234,11 @@ class FieldedBlockSearchEngine:
                     slot_rows = [(qi, ci, i, t)
                                  for qi, ci, terms_p, _w in group
                                  for i, t in enumerate(terms_p)]
-                    slots = self.spark.createDataFrame(
-                        slot_rows, "query_id int, clause_id int, "
+                    slots = local_frame(
+                        self.spark, slot_rows, "query_id int, clause_id int, "
                         "slot int, term string")
-                    wdf = self.spark.createDataFrame(
-                        [(qi, ci, w) for qi, ci, _ts, w in group],
+                    wdf = local_frame(
+                        self.spark, [(qi, ci, w) for qi, ci, _ts, w in group],
                         "query_id int, clause_id int, w int")
                     sides = []
                     for i in range(n):
@@ -1290,8 +1287,8 @@ class FieldedBlockSearchEngine:
                     )
 
             scored = reduce(lambda a, b: a.unionByName(b), parts)
-            ndf = self.spark.createDataFrame(
-                [(qi, len(cls)) for qi, cls in parsed if cls],
+            ndf = local_frame(
+                self.spark, [(qi, len(cls)) for qi, cls in parsed if cls],
                 "query_id int, n_clauses int")
             d = (
                 scored.groupBy("query_id", "doc_id")

@@ -33,6 +33,7 @@ from prosearch_spark.query.engine import (
     materialize_topk,
     rank_topk,
 )
+from prosearch_spark.session import local_frame
 
 
 def build_positional(spark: SparkSession, docs: DataFrame,
@@ -47,8 +48,8 @@ def build_positional(spark: SparkSession, docs: DataFrame,
     n_docs = docs.count()
     tok_total = pp.agg(F.sum("tf")).collect()[0][0] or 0
     avgdl = tok_total / n_docs if n_docs else 0.0
-    stats = spark.createDataFrame([(n_docs, float(avgdl))],
-                                  "n_docs long, avgdl double")
+    stats = local_frame(spark, [(n_docs, float(avgdl))],
+                        "n_docs long, avgdl double")
     return pp, stats
 
 
@@ -115,7 +116,7 @@ def _mixed_impl(spark: SparkSession, docs: DataFrame | None,
     taking PARSED clauses and by scoring ("slop", (terms, n)) clauses
     through phrase_slop_matches instead of phrase_matches."""
     if not clauses:
-        return spark.createDataFrame([], TOPK_SCHEMA)
+        return local_frame(spark, [], TOPK_SCHEMA)
     n_clauses = len(clauses)
     term_clauses = [c for kind, c in clauses if kind == "term"]
     phrase_clauses = [c for kind, c in clauses if kind == "phrase"]
@@ -131,8 +132,8 @@ def _mixed_impl(spark: SparkSession, docs: DataFrame | None,
     try:
         scored_parts: list[DataFrame] = []
         if term_clauses:
-            qdf = spark.createDataFrame(term_clauses,
-                                        "term string, boost double")
+            qdf = local_frame(spark, term_clauses,
+                              "term string, boost double")
             terms = sorted({t for t, _ in term_clauses})
             ts = term_stats if term_stats is not None else (
                 pp.filter(F.col("term").isin(terms))
@@ -155,7 +156,7 @@ def _mixed_impl(spark: SparkSession, docs: DataFrame | None,
             persisted.append(m)
             phrase_df = m.count()
             if phrase_df == 0:
-                return spark.createDataFrame([], TOPK_SCHEMA)  # AND dead
+                return local_frame(spark, [], TOPK_SCHEMA)  # AND dead
             scored_parts.append(phrase_scores(m, phrase_df, stats))
         for terms, slop in slop_clauses:
             from prosearch_spark.index.positions import phrase_slop_matches
@@ -164,7 +165,7 @@ def _mixed_impl(spark: SparkSession, docs: DataFrame | None,
             persisted.append(m)
             phrase_df = m.count()
             if phrase_df == 0:
-                return spark.createDataFrame([], TOPK_SCHEMA)  # AND dead
+                return local_frame(spark, [], TOPK_SCHEMA)  # AND dead
             scored_parts.append(phrase_scores(m, phrase_df, stats))
 
         scored = reduce(lambda a, b: a.unionByName(b), scored_parts)

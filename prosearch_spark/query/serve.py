@@ -18,6 +18,15 @@ from pyspark.sql import functions as F
 from prosearch_spark.index.build import InvertedIndex
 from prosearch_spark.query.engine import SearchEngine
 from prosearch_spark.query.snippet import with_snippet
+from prosearch_spark.session import local_frame
+
+
+def _collect_ranked(fetched: DataFrame) -> list:
+    """The <=k fetched hits, ordered by rank on the driver. A
+    DataFrame ``orderBy`` here is a global sort whose range-partition
+    sampling job re-runs the doc-store scan, the join and the snippet
+    UDF before the real collect."""
+    return sorted(fetched.collect(), key=lambda r: r["rank"])
 
 
 class ArtifactSearcher:
@@ -203,8 +212,8 @@ class ArtifactSearcher:
                 return batch
             # remap the sub-batch's positional ids to the original
             # list positions
-            mapping = self.spark.createDataFrame(
-                list(enumerate(idx)), "query_id int, orig int")
+            mapping = local_frame(
+                self.spark, list(enumerate(idx)), "query_id int, orig int")
             return batch.join(F.broadcast(mapping), "query_id") \
                 .select(F.col("orig").alias("query_id"), "rank",
                         "doc_id", "score")
@@ -230,7 +239,7 @@ class ArtifactSearcher:
                     [queries[i] for i in quoted_idx], k, round_to),
                 quoted_idx))
         if not parts:
-            return self.spark.createDataFrame([], MULTI_TOPK_SCHEMA)
+            return local_frame(self.spark, [], MULTI_TOPK_SCHEMA)
         return reduce(lambda a, b: a.unionByName(b), parts) \
             .orderBy("query_id", "rank")
 
@@ -315,7 +324,7 @@ class ArtifactSearcher:
             for kind, c in parse_query_slop(q)
         )
         fetched = with_snippet(fetched, flat_terms, self.body_col)
-        rows = fetched.orderBy("rank").collect()
+        rows = _collect_ranked(fetched)
         ms = (time.perf_counter() - t0) * 1000.0
         return {
             "q": q,
@@ -356,7 +365,7 @@ class Searcher:
             self.id_col,
         )
         fetched = with_snippet(fetched, q, self.body_col)
-        rows = fetched.orderBy("rank").collect()
+        rows = _collect_ranked(fetched)
         ms = (time.perf_counter() - t0) * 1000.0
         return {
             "q": q,
@@ -427,7 +436,7 @@ class Searcher:
             for kind, c in clauses
         )
         fetched = with_snippet(fetched, flat_terms, self.body_col)
-        rows = fetched.orderBy("rank").collect()
+        rows = _collect_ranked(fetched)
         ms = (time.perf_counter() - t0) * 1000.0
         return {
             "q": q,

@@ -306,3 +306,55 @@ def test_chunking_has_no_shuffle_and_packing_exactly_one(spark, corpus,
     n_shuffles = pp.count("Exchange hashpartitioning")
     assert n_shuffles == 1, pp
     assert "Window" in pp
+
+
+def _assert_no_python_rdd(df) -> None:
+    """No driver-built Python-RDD leaf anywhere in the plan: each one
+    is a LogicalRDD ('Scan ExistingRDD' physically) whose every scan
+    or broadcast costs a job of Python-worker tasks."""
+    qe = df._jdf.queryExecution()
+    for p in (qe.optimizedPlan().toString(), qe.executedPlan().toString()):
+        assert "LogicalRDD" not in p and "ExistingRDD" not in p, p[:2000]
+
+
+@pytest.fixture(scope="module")
+def pos_searcher(spark, corpus, tmp_path_factory):
+    from prosearch_spark.query.serve import ArtifactSearcher
+
+    art = save_index(spark, corpus, str(tmp_path_factory.mktemp("lrpos")),
+                     text_col="content", with_positions=True, n_buckets=4)
+    return ArtifactSearcher(spark, art, body_col="content")
+
+
+@pytest.mark.parametrize("q,plan_name", [
+    ("spark shuffle", "wand"),
+    ('python "spark shuffle"', "mixed"),
+])
+def test_route_hits_have_no_python_rdd(pos_searcher, q, plan_name):
+    hits, plan = pos_searcher.route(q, 5, round_to=6)
+    assert plan == plan_name
+    _assert_no_python_rdd(hits)
+
+
+def test_pruned_wand_has_no_python_rdd(pos_searcher):
+    hits, _stats = pos_searcher.block.topk_wand(
+        "spark shuffle", 5, round_to=6, min_prune_blocks=0)
+    _assert_no_python_rdd(hits)
+
+
+def test_mixed_msearch_has_no_python_rdd(pos_searcher):
+    batch = ["spark", 'spark "join hash"', "join hash", '"zzz qqq" spark']
+    _assert_no_python_rdd(pos_searcher.msearch(batch, 5, round_to=6))
+
+
+def test_materialize_topk_and_stats_are_local(spark, corpus,
+                                              pos_searcher):
+    from prosearch_spark.query.engine import materialize_topk
+
+    eng = SearchEngine(spark, build_index(corpus, text_col="content"))
+    top = materialize_topk(spark, eng.topk("spark", 5, round_to=6))
+    stats = pos_searcher.artifact.stats()
+    for df in (top, stats):
+        _assert_no_python_rdd(df)
+        assert df._jdf.queryExecution().analyzed().getClass() \
+            .getSimpleName() == "LocalRelation"
