@@ -21,22 +21,34 @@ Our payload per block row:
 
 Build shape (scale-safe — NO collect_list over a hot term, NO window
 over a skewed term partition): ``repartitionByRange(term, doc_id)`` →
-``sortWithinPartitions`` → ``mapInPandas`` cutting per-term runs into
-blocks. A hot term spanning several range partitions simply yields
-several independent block runs — semantically equivalent, and each
-task's memory is bounded by its partition, not by the term.
+``sortWithinPartitions`` → ``mapInArrow`` over a vectorized numpy/
+pyarrow kernel (``_cut_blocks``): term runs start where one
+``pc.not_equal`` over adjacent terms fires, blocks start every
+BLOCK_SIZE rows into a run, max_tf/min_dl are ``reduceat``s over the
+cuts, and every varint stream of the batch is LEB128-encoded at once
+(``_leb128``) with each binary column assembled by
+``pa.Array.from_buffers`` over the block byte offsets — no per-term
+or per-block Python loop. A hot term spanning several range
+partitions simply yields several independent block runs —
+semantically equivalent, and each task's memory is bounded by its
+partition, not by the term.
 
-Decode is the inverse ``mapInPandas``; both directions are
-Arrow-batched (no per-row Python UDFs).
+Decode is the inverse ``mapInPandas`` with a vectorized LEB128 decode
+per buffer (``_decode_np``); both directions are Arrow-batched (no
+per-row Python UDFs). ``decode_varints`` is the pure-Python reference
+decoder.
 """
 
 from __future__ import annotations
 
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -84,43 +96,50 @@ POSTING_SCHEMA_POS = StructType(
 
 # -- varint primitives (LEB128, unsigned) -------------------------------------
 
-import numpy as np
+# a value needs one more LEB128 byte at each of these thresholds
+# (2^7, 2^14, ..., 2^56); int64 values top out at 9 bytes
+_LEB_THRESH = np.array([1 << (7 * k) for k in range(1, 9)], dtype=np.int64)
+
+
+def _leb128(values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """LEB128-encode every value at once.
+
+    Returns ``(data, offsets)``: the concatenated bytes and the
+    ``len(values) + 1`` byte offsets of each value's encoding. Lengths
+    come from the shift thresholds; bytes are written by one scatter
+    per byte position (at most 9), never by a per-value loop.
+    """
+    v = np.asarray(values, dtype=np.int64)
+    if v.size and v.min() < 0:
+        # unsigned LEB128 only: a negative value (e.g. deltas from
+        # UNSORTED doc_ids) has no encoding
+        raise ValueError("encode_varints requires non-negative values")
+    if not v.size or v.max() < 128:
+        return v.astype(np.uint8), np.arange(v.size + 1)
+    lens = 1 + np.searchsorted(_LEB_THRESH, v, side="right")
+    offsets = np.zeros(v.size + 1, dtype=np.int64)
+    np.cumsum(lens, out=offsets[1:])
+    out = np.empty(int(offsets[-1]), dtype=np.uint8)
+    pos, rem, left = offsets[:-1], v, lens
+    while pos.size:
+        more = left > 1
+        out[pos] = (rem & 0x7F) | (more.astype(np.int64) << 7)
+        pos, rem, left = pos[more] + 1, rem[more] >> 7, left[more] - 1
+    return out, offsets
 
 
 def encode_varints(values) -> bytes:
-    """LEB128-encode; vectorized fast path when every value < 128
-    (one byte each — the common case for deltas and tfs in 128-doc
-    blocks), Python loop otherwise."""
-    a = np.asarray(values, dtype=np.int64)
-    if a.size == 0:
-        return b""
-    if a.min() < 0:
-        # unsigned LEB128 only: a negative value (e.g. deltas from
-        # UNSORTED doc_ids) would loop forever in the generic path
-        raise ValueError("encode_varints requires non-negative values")
-    if a.max() < 128:
-        return a.astype(np.uint8).tobytes()
-    out = bytearray()
-    for v in a.tolist():
-        while True:
-            b = v & 0x7F
-            v >>= 7
-            if v:
-                out.append(b | 0x80)
-            else:
-                out.append(b)
-                break
-    return bytes(out)
+    """LEB128-encode one stream (the block kernel's codec)."""
+    return _leb128(values)[0].tobytes()
 
 
 def decode_varints(buf: bytes) -> list[int]:
-    b = np.frombuffer(buf, dtype=np.uint8)
-    if not (b & 0x80).any():
-        return b.astype(np.int64).tolist()  # all single-byte
+    """Pure-Python LEB128 decode — the reference the vectorized
+    ``_decode_np`` is tested against."""
     out: list[int] = []
     cur = 0
     shift = 0
-    for x in b.tolist():
+    for x in bytes(buf):
         cur |= (x & 0x7F) << shift
         if x & 0x80:
             shift += 7
@@ -131,82 +150,131 @@ def decode_varints(buf: bytes) -> list[int]:
     return out
 
 
-# -- encode / decode mapInPandas kernels ---------------------------------------
+def _decode_np(buf: bytes) -> np.ndarray:
+    """Vectorized LEB128 decode: a value ends at every byte with the
+    high bit clear; each value is ``np.add.reduceat`` of its 7-bit
+    groups shifted by 7 x their position in the value. An unterminated
+    tail (no end byte) is dropped, as in ``decode_varints``."""
+    b = np.frombuffer(buf, dtype=np.uint8)
+    last = b < 0x80
+    if last.all():
+        return b.astype(np.int64)  # all single-byte
+    ends = np.flatnonzero(last)
+    if not ends.size:
+        return np.empty(0, dtype=np.int64)
+    b = b[:ends[-1] + 1]
+    starts = np.empty_like(ends)
+    starts[0] = 0
+    starts[1:] = ends[:-1] + 1
+    shift = 7 * (np.arange(b.size) - np.repeat(starts, ends - starts + 1))
+    return np.add.reduceat((b & 0x7F).astype(np.int64) << shift, starts)
 
-def _encode_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Input: sorted (term, doc_id, tf, dl) rows. Output: block rows.
 
-    Carries an open run across Arrow batches so blocks fill to
+# -- encode / decode kernels ----------------------------------------------------
+
+_BLOCK_ARROW = to_arrow_schema(BLOCK_SCHEMA)
+_BLOCK_ARROW_POS = to_arrow_schema(BLOCK_SCHEMA_POS)
+
+
+def _binary(data: np.ndarray, offsets: np.ndarray) -> pa.Array:
+    """A binary column whose i-th value is ``data[offsets[i]:offsets[i+1]]``."""
+    return pa.Array.from_buffers(
+        pa.binary(), offsets.size - 1,
+        [None, pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(data)])
+
+
+def _cut_blocks(batch: pa.RecordBatch, flush: bool
+                ) -> tuple[pa.RecordBatch | None, pa.RecordBatch | None]:
+    """Sorted (term, doc_id, tf, dl[, positions]) rows -> (block rows,
+    carried rows).
+
+    Term runs start where a term differs from its predecessor; blocks
+    start every BLOCK_SIZE rows into a run. Unless ``flush``, an
+    incomplete last block (the open tail of the batch's last term) is
+    returned uncut as the carry for the next batch.
+    """
+    n = batch.num_rows
+    terms = batch.column("term")
+    new_run = np.ones(n, dtype=bool)
+    if n > 1:
+        new_run[1:] = pc.not_equal(terms.slice(1), terms.slice(0, n - 1)) \
+            .to_numpy(zero_copy_only=False)
+    idx = np.arange(n)
+    run_start = np.maximum.accumulate(np.where(new_run, idx, 0))
+    cuts = np.flatnonzero((idx - run_start) % BLOCK_SIZE == 0)
+    end = n
+    rest = None
+    if not flush and n - cuts[-1] < BLOCK_SIZE:
+        end = int(cuts[-1])
+        cuts = cuts[:-1]
+        rest = batch.slice(end)
+    if not cuts.size:
+        return None, rest
+    bounds = np.append(cuts, end)
+
+    doc = batch.column("doc_id").to_numpy()[:end]
+    tf = batch.column("tf").to_numpy()[:end]
+    dl = batch.column("dl").to_numpy()[:end]
+    # deltas from each block's first doc: 0 at every cut
+    delta = np.empty(end, dtype=np.int64)
+    delta[0] = 0
+    np.subtract(doc[1:], doc[:-1], out=delta[1:])
+    delta[cuts] = 0
+    cols = [
+        terms.take(pa.array(cuts)),
+        pa.array(doc[cuts]),
+        pa.array(doc[bounds[1:] - 1]),
+        pa.array(np.diff(bounds).astype(np.int32)),
+        pa.array(np.maximum.reduceat(tf, cuts).astype(np.int32)),
+        pa.array(np.minimum.reduceat(dl, cuts)),
+    ]
+    for vals in (delta, tf, dl):
+        data, off = _leb128(vals)
+        cols.append(_binary(data, off[bounds]))
+    if "positions" not in batch.schema.names:
+        return pa.RecordBatch.from_arrays(cols, schema=_BLOCK_ARROW), rest
+    # one varint stream per block: per posting, first position absolute
+    # then gaps; tfs delimits the stream
+    lists = batch.column("positions")
+    loff = np.asarray(lists.offsets)[:end + 1].astype(np.int64)
+    pos = lists.values.to_numpy(zero_copy_only=False)[loff[0]:loff[-1]] \
+        .astype(np.int64)
+    loff -= loff[0]
+    gaps = np.empty_like(pos)
+    if pos.size:
+        gaps[0] = pos[0]
+        np.subtract(pos[1:], pos[:-1], out=gaps[1:])
+        firsts = loff[:-1][loff[:-1] < pos.size]
+        gaps[firsts] = pos[firsts]
+    data, off = _leb128(gaps)
+    cols.append(_binary(data, off[loff[bounds]]))
+    return pa.RecordBatch.from_arrays(cols, schema=_BLOCK_ARROW_POS), rest
+
+
+def _encode_partition(batches: Iterator[pa.RecordBatch]
+                      ) -> Iterator[pa.RecordBatch]:
+    """Input: sorted (term, doc_id, tf, dl[, positions]) Arrow batches.
+    Output: block rows, one batch per input batch.
+
+    Carries the open last block across Arrow batches so blocks fill to
     BLOCK_SIZE even when a term straddles batch boundaries.
     """
-    pend: pd.DataFrame | None = None
-
-    def cut(df: pd.DataFrame, flush_all: bool) -> tuple[list[dict], pd.DataFrame | None]:
-        with_pos = "positions" in df.columns
-        rows: list[dict] = []
-        rest: pd.DataFrame | None = None
-        for term, g in df.groupby("term", sort=False):
-            docs = g["doc_id"].to_numpy()
-            tfs = g["tf"].to_numpy()
-            dls = g["dl"].to_numpy()
-            poss = g["positions"].to_numpy() if with_pos else None
-            n = len(docs)
-            full = n if flush_all or term != df["term"].iloc[-1] else (
-                (n // BLOCK_SIZE) * BLOCK_SIZE
-            )
-            import numpy as np
-
-            for s in range(0, full, BLOCK_SIZE):
-                e = min(s + BLOCK_SIZE, full)
-                d = docs[s:e]
-                deltas = np.diff(d, prepend=d[0])
-                row = {
-                    "term": term,
-                    "first_doc": int(d[0]),
-                    "last_doc": int(d[-1]),
-                    "n": int(e - s),
-                    "max_tf": int(tfs[s:e].max()),
-                    "min_dl": int(dls[s:e].min()),
-                    "docs": encode_varints(deltas),
-                    "tfs": encode_varints(tfs[s:e]),
-                    "dls": encode_varints(dls[s:e]),
-                }
-                if with_pos:
-                    # one varint stream: per posting, first position
-                    # absolute then gaps; tfs delimits the stream
-                    stream: list[int] = []
-                    for plist in poss[s:e]:
-                        prev = None
-                        for p in plist:
-                            stream.append(int(p) if prev is None
-                                          else int(p) - prev)
-                            prev = int(p)
-                    row["positions"] = encode_varints(stream)
-                rows.append(row)
-            if full < n:
-                rest = g.iloc[full:]
-        return rows, rest
-
+    pend: pa.RecordBatch | None = None
     for batch in batches:
         if pend is not None:
-            batch = pd.concat([pend, batch], ignore_index=True)
+            batch = pa.RecordBatch.from_arrays(
+                [pa.concat_arrays([pend.column(i), batch.column(i)])
+                 for i in range(batch.num_columns)],
+                schema=batch.schema)
             pend = None
-        rows, pend = cut(batch, flush_all=False)
-        if rows:
-            yield pd.DataFrame(rows)
-    if pend is not None and len(pend):
-        rows, _ = cut(pend, flush_all=True)
-        if rows:
-            yield pd.DataFrame(rows)
-
-
-def _decode_np(buf: bytes) -> "np.ndarray":
-    """Vectorized varint decode: all-single-byte buffers (the common
-    case) are one ``frombuffer``; mixed buffers fall back."""
-    b = np.frombuffer(buf, dtype=np.uint8)
-    if not (b & 0x80).any():
-        return b.astype(np.int64)
-    return np.asarray(decode_varints(buf), dtype=np.int64)
+        if not batch.num_rows:
+            continue
+        out, pend = _cut_blocks(batch, flush=False)
+        if out is not None:
+            yield out
+    if pend is not None:
+        out, _ = _cut_blocks(pend, flush=True)
+        yield out
 
 
 def _decode_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -277,7 +345,7 @@ def encode_blocks(postings: DataFrame, num_partitions: int | None = None) -> Dat
         .sortWithinPartitions("term", "doc_id")
     )
     schema = BLOCK_SCHEMA_POS if with_pos else BLOCK_SCHEMA
-    return arranged.mapInPandas(_encode_partition, schema)
+    return arranged.mapInArrow(_encode_partition, schema)
 
 
 def decode_blocks(blocks: DataFrame) -> DataFrame:

@@ -5,20 +5,31 @@ The Spark analog of the reference's crawl-state accounting
 on startup; JdbcStoreEngine.java:343-353 re-queues; ProCrawler.java:
 72-113 renames processed->cached on recrawl): the corpus is cut into
 deterministic SPLITS (``pmod(xxhash64(doc_id), n_splits)``), each
-split's partial postings are committed independently with a lineage
+split's partial postings land in their own directory with a lineage
 row, and a restarted build SKIPS splits whose lineage row says done
 (B11). ``finalize()`` merges partials into the queryable artifact and
 emits build metrics — files/sec, postings/sec, bytes — the analog of
 the reference's indexing telemetry (index.rs:164-189) (B10).
 
+Resumability unit: ``run()`` builds ALL pending splits in one pass —
+one scan of the input, one ``partitionBy(split)`` write with dynamic
+partition overwrite (completed splits' directories are never touched),
+one grouped accounting aggregate — then commits the lineage rows in
+split order. A crash inside a pass loses that whole pass (its splits
+have no lineage row and are rebuilt on resume); ``build_split(k)`` is
+the same pass over one split, for callers that want a checkpoint per
+split at the cost of one input scan per split.
+
 Lineage row (FIXTURES.md §4): run_id, split_id, status, rows
 (=postings), n_docs, tokens, bytes_in, content_sha256_xor (order-
 insensitive 64-bit fold of per-row sha256 — the per-row invariant
-digest), wall seconds.
+digest), wall seconds. A pass charges each of its splits an equal
+share of its wall, so ``metrics.json`` ``wall_sec`` (the sum over
+rows plus finalize) is still the real build wall.
 
 Layout:
     <dir>/partials/split=<k>/      partial postings parquet
-    <dir>/lineage/<k>.json         lineage row, written AFTER the split
+    <dir>/lineage/<k>.json         lineage row, written AFTER the pass
     <dir>/metrics.json             build metrics, written by finalize()
     <dir>/index/                   final IndexArtifact (manifest-gated)
 """
@@ -27,11 +38,13 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType
 
 from prosearch_spark.index.artifact import IndexArtifact, _write_artifact
 from prosearch_spark.index.build import term_frequencies
@@ -122,72 +135,108 @@ class ResumableIndexBuild:
 
     # -- split build -------------------------------------------------------------
 
-    def _split_docs(self, split: int) -> DataFrame:
-        return self.docs.filter(
-            F.pmod(F.xxhash64(F.col(self.id_col)), F.lit(self.n_splits)) == split
-        )
+    def _split_of(self, col: str):
+        return F.pmod(F.xxhash64(F.col(col)), F.lit(self.n_splits))
 
-    def build_split(self, split: int, fail_before_commit: bool = False) -> dict:
-        """Build one split's partial postings + lineage commit.
-
-        Partial = (term, doc_id, tf, dl): dl is per-doc so it is
-        complete within the split; global df/avgdl are finalize()'s
-        job. ``fail_before_commit`` simulates a crash for tests.
-        """
-        t0 = time.perf_counter()
-        sd = self._split_docs(split)
+    def _partial(self, docs: DataFrame) -> DataFrame:
+        """(term, doc_id, tf, dl[, positions]) postings of ``docs``."""
         if self.with_positions:
             from prosearch_spark.index.positions import positional_postings
 
-            partial = positional_postings(sd, text_col=self.text_col,
-                                          id_col=self.id_col)
-        else:
-            tf = term_frequencies(sd, self.text_col, self.id_col,
-                                  self.analyzer, self.lang_col)
-            partial = tf.withColumn(
-                "dl", F.sum("tf").over(Window.partitionBy("doc_id"))
-            )
-        out = os.path.join(self.path, "partials", f"split={split}")
-        partial.write.mode("overwrite").parquet(out)
+            return positional_postings(docs, text_col=self.text_col,
+                                       id_col=self.id_col)
+        tf = term_frequencies(docs, self.text_col, self.id_col,
+                              self.analyzer, self.lang_col)
+        return tf.withColumn(
+            "dl", F.sum("tf").over(Window.partitionBy("doc_id")))
 
-        acct = sd.agg(
+    def _read_partials(self) -> DataFrame:
+        # explicit schema: a pass whose splits hold no postings writes
+        # no part file to infer one from
+        schema = self._partial(self.docs).schema.add("split", IntegerType())
+        return self.spark.read.schema(schema).parquet(
+            os.path.join(self.path, "partials"))
+
+    def _build_pass(self, pending: list[int],
+                    fail_at_split: int | None = None) -> list[dict]:
+        """Tokenize and write every pending split in ONE pass, then
+        commit their lineage rows in split order.
+
+        Partial = (term, doc_id, tf, dl[, positions]) under
+        ``partials/split=<k>/``: dl is per-doc so it is complete within
+        the split; global df/avgdl are finalize()'s job. The write
+        overwrites dynamically — only the pending splits' directories
+        are replaced, a completed split's files are never touched.
+        ``fail_at_split`` simulates a crash just before that split's
+        lineage row (tests): the splits before it stay committed.
+        """
+        t0 = time.perf_counter()
+        sd = self.docs.withColumn("_split", self._split_of(self.id_col)) \
+            .filter(F.col("_split").isin(pending))
+        partial = self._partial(sd)
+        out = os.path.join(self.path, "partials")
+        for k in pending:
+            # a crashed pass may have left a pending split's directory;
+            # a split with no postings this pass writes none to replace it
+            shutil.rmtree(os.path.join(out, f"split={k}"), ignore_errors=True)
+        (partial.withColumn("split", self._split_of("doc_id"))
+         .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+         .partitionBy("split").parquet(out))
+
+        acct = {r["_split"]: r.asDict() for r in sd.groupBy("_split").agg(
             F.count("*").alias("n_docs"),
             F.sum(F.length(self.text_col)).alias("bytes_in"),
             F.bit_xor(
                 F.conv(F.substring(F.sha2(F.col(self.text_col), 256), 1, 15),
                        16, 10).cast("long")
             ).alias("sha_xor"),
-        ).collect()[0]
-        n_postings = self.spark.read.parquet(out).count()
+        ).collect()}
+        n_postings = {r["split"]: r["count"] for r in (
+            self._read_partials().filter(F.col("split").isin(pending))
+            .groupBy("split").count().collect())}
+        # the pass is shared: each split is charged an equal share, so
+        # the rows still sum to the real wall
+        wall = round((time.perf_counter() - t0) / len(pending), 4)
 
-        if fail_before_commit:
-            raise RuntimeError(f"simulated crash before lineage commit, split {split}")
+        rows = []
+        for k in pending:
+            if k == fail_at_split:
+                raise RuntimeError(
+                    f"simulated crash before lineage commit, split {k}")
+            a = acct.get(k, {})
+            row = {
+                "run_id": self.run_id,
+                "split_id": k,
+                "status": "done",
+                "rows": int(n_postings.get(k, 0)),
+                "n_docs": int(a.get("n_docs") or 0),
+                "bytes_in": int(a.get("bytes_in") or 0),
+                "content_sha256_xor": int(a.get("sha_xor") or 0),
+                "wall_sec": wall,
+            }
+            tmp = self._lineage_path(k) + ".tmp"
+            with open(tmp, "w") as f:
+                json.dump(row, f)
+            os.replace(tmp, self._lineage_path(k))
+            rows.append(row)
+        return rows
 
-        row = {
-            "run_id": self.run_id,
-            "split_id": split,
-            "status": "done",
-            "rows": int(n_postings),
-            "n_docs": int(acct["n_docs"] or 0),
-            "bytes_in": int(acct["bytes_in"] or 0),
-            "content_sha256_xor": int(acct["sha_xor"] or 0),
-            "wall_sec": round(time.perf_counter() - t0, 4),
-        }
-        tmp = self._lineage_path(split) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(row, f)
-        os.replace(tmp, self._lineage_path(split))
-        return row
+    def build_split(self, split: int, fail_before_commit: bool = False) -> dict:
+        """Build one split's partial postings + lineage commit — the
+        one-pass build over a single pending split, for callers that
+        want a checkpoint per split. ``fail_before_commit`` simulates a
+        crash for tests."""
+        return self._build_pass(
+            [split], fail_at_split=split if fail_before_commit else None)[0]
 
     def run(self, fail_at_split: int | None = None) -> list[dict]:
-        """Build every incomplete split (resume = call run() again)."""
-        rows = []
+        """Build every incomplete split in one pass (resume = call run()
+        again: only splits without a lineage row are rebuilt)."""
         done = self.completed_splits()
-        for k in range(self.n_splits):
-            if k in done:
-                continue
-            rows.append(self.build_split(k, fail_before_commit=(k == fail_at_split)))
-        return rows
+        pending = [k for k in range(self.n_splits) if k not in done]
+        if not pending:
+            return []
+        return self._build_pass(pending, fail_at_split)
 
     # -- finalize -----------------------------------------------------------------
 
@@ -210,7 +259,7 @@ class ResumableIndexBuild:
             artifact = IndexArtifact.load(self.spark, idx_path)
             return artifact, self._write_metrics(artifact, extra_wall=0.0)
         t0 = time.perf_counter()
-        partials = self.spark.read.parquet(os.path.join(self.path, "partials"))
+        partials = self._read_partials()
         cols = ["term", "doc_id", "tf", "dl"] + (
             ["positions"] if self.with_positions else []
         )

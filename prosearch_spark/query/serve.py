@@ -240,8 +240,12 @@ class ArtifactSearcher:
                 quoted_idx))
         if not parts:
             return local_frame(self.spark, [], MULTI_TOPK_SCHEMA)
+        # <= batch x k rows: one partition, sorted locally. A global
+        # orderBy would range-partition, and its sampling job re-runs
+        # the union's last stage; coalesce(1) would collapse the
+        # window-rank stage itself to one task
         return reduce(lambda a, b: a.unionByName(b), parts) \
-            .orderBy("query_id", "rank")
+            .repartition(1).sortWithinPartitions("query_id", "rank")
 
     def profile(self, q: str, k: int = 10) -> dict:
         """Per-query diagnostics — the reference's timer tree analog

@@ -139,6 +139,71 @@ def test_lineage_record_basic_matches_save_index(spark, corpus, tmp_path):
         [(x["doc_id"], x["score"]) for x in r]
 
 
+def _files(path) -> dict[str, str]:
+    """{file name: sha256 of its bytes} for every file under ``path``."""
+    import hashlib
+
+    return {p.name: hashlib.sha256(p.read_bytes()).hexdigest()
+            for p in path.rglob("*") if p.is_file()}
+
+
+def test_resume_leaves_completed_split_files_untouched(spark, corpus,
+                                                        tmp_path):
+    """run() writes its pass with a DYNAMIC partition overwrite: the
+    resumed pass replaces only the pending splits' directories; the
+    committed splits' partial files keep their names and bytes (a
+    static overwrite of partials/ would rewrite or drop them)."""
+    b = ResumableIndexBuild(spark, corpus, str(tmp_path / "ckptu"),
+                            text_col="content", n_splits=4)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        b.run(fail_at_split=2)
+    parts = tmp_path / "ckptu" / "partials"
+    before = {k: _files(parts / f"split={k}") for k in (0, 1)}
+    assert all(before.values())
+    rows = b.run()
+    assert [r["split_id"] for r in rows] == [2, 3]
+    # one pass: its wall is shared equally by the splits it built
+    assert len({r["wall_sec"] for r in rows}) == 1
+    assert {k: _files(parts / f"split={k}") for k in (0, 1)} == before
+    assert b.verify_content_sha()
+
+
+def _jobs_in_group(spark, group: str, fn) -> int:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup("", "")
+    return len(sc.statusTracker().getJobIdsForGroup(group) or [])
+
+
+def test_run_is_one_pass_over_pending_splits(spark, corpus, tmp_path):
+    """run() over 4 pending splits costs the jobs of ONE split's build
+    (one write, one grouped accounting aggregate, one grouped re-read),
+    not 4x: the input is scanned once, not once per split."""
+    one = ResumableIndexBuild(spark, corpus, str(tmp_path / "jobs1"),
+                              text_col="content", n_splits=4)
+    four = ResumableIndexBuild(spark, corpus, str(tmp_path / "jobs4"),
+                               text_col="content", n_splits=4)
+    n_one = _jobs_in_group(spark, "lineage-one-split",
+                           lambda: one.build_split(0))
+    n_four = _jobs_in_group(spark, "lineage-run-4", four.run)
+    assert four.completed_splits() == {0, 1, 2, 3}
+    assert n_four <= n_one + 2, (n_one, n_four)
+
+
+def test_empty_corpus_builds_and_finalizes(spark, corpus, tmp_path):
+    """A pass with no postings writes no part file; finalize still
+    commits the empty artifact."""
+    b = ResumableIndexBuild(spark, corpus.limit(0), str(tmp_path / "empty"),
+                            text_col="content", n_splits=3)
+    assert [r["rows"] for r in b.run()] == [0, 0, 0]
+    art, metrics = b.finalize()
+    assert art.manifest["n_docs"] == 0
+    assert metrics.n_docs == 0 and metrics.n_postings == 0
+
+
 def test_lineage_rejects_basic_positional_combo(spark, corpus, tmp_path):
     with pytest.raises(ValueError, match="mutually exclusive"):
         ResumableIndexBuild(spark, corpus, str(tmp_path / "bad"),

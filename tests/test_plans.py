@@ -347,6 +347,16 @@ def test_mixed_msearch_has_no_python_rdd(pos_searcher):
     _assert_no_python_rdd(pos_searcher.msearch(batch, 5, round_to=6))
 
 
+def test_mixed_msearch_has_no_global_sort(pos_searcher):
+    """msearch orders its <= batch x k rows in ONE partition: no
+    range-partitioned global sort (whose sampling job re-runs the
+    union's last stage)."""
+    batch = ["spark", 'spark "join hash"', "join hash", '"zzz qqq" spark']
+    plan = _plan(pos_searcher.msearch(batch, 5, round_to=6))
+    assert "rangepartitioning" not in plan.lower(), plan
+    assert "SinglePartition" in plan, plan
+
+
 def test_materialize_topk_and_stats_are_local(spark, corpus,
                                               pos_searcher):
     from prosearch_spark.query.engine import materialize_topk

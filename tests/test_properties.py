@@ -61,6 +61,141 @@ def test_snippet_bounded_and_safe(text, terms):
     assert s.count("<b>") == s.count("</b>")
 
 
+def _arrow_batches(df, sizes=None):
+    """A pandas postings frame as Arrow batches of the given row counts
+    (one batch when ``sizes`` is None), typed as Spark sends them."""
+    import pyarrow as pa
+
+    fields = [("term", pa.string()), ("doc_id", pa.int64()),
+              ("tf", pa.int64()), ("dl", pa.int64())]
+    if "positions" in df.columns:
+        fields.append(("positions", pa.list_(pa.int32())))
+    schema = pa.schema(fields)
+    sizes = sizes or [len(df)]
+    out, at = [], 0
+    for n in sizes:
+        out.append(pa.RecordBatch.from_pandas(
+            df.iloc[at:at + n].reset_index(drop=True), schema=schema,
+            preserve_index=False))
+        at += n
+    return out
+
+
+def _encode(batches):
+    """The block kernel over Arrow batches, as one pandas frame."""
+    import pyarrow as pa
+
+    from prosearch_spark.index.blocks import _encode_partition
+
+    return pa.Table.from_batches(list(_encode_partition(iter(batches)))) \
+        .to_pandas()
+
+
+def _ref_varints(values) -> bytes:
+    out = bytearray()
+    for v in values:
+        v = int(v)
+        while True:
+            b = v & 0x7F
+            v >>= 7
+            if v:
+                out.append(b | 0x80)
+            else:
+                out.append(b)
+                break
+    return bytes(out)
+
+
+def _ref_encode(df):
+    """Reference block cutter: a per-term loop over the sorted postings
+    (128-posting blocks from each term's first posting), pure-Python
+    LEB128 — what the vectorized kernel must reproduce byte for byte."""
+    import pandas as pd
+
+    with_pos = "positions" in df.columns
+    rows = []
+    for term, g in df.groupby("term", sort=False):
+        docs, tfs, dls = (g[c].tolist() for c in ("doc_id", "tf", "dl"))
+        poss = g["positions"].tolist() if with_pos else None
+        for s in range(0, len(docs), 128):
+            e = min(s + 128, len(docs))
+            d = docs[s:e]
+            row = {
+                "term": term, "first_doc": d[0], "last_doc": d[-1],
+                "n": e - s, "max_tf": max(tfs[s:e]), "min_dl": min(dls[s:e]),
+                "docs": _ref_varints([0] + [b - a for a, b in zip(d, d[1:])]),
+                "tfs": _ref_varints(tfs[s:e]),
+                "dls": _ref_varints(dls[s:e]),
+            }
+            if with_pos:
+                stream = []
+                for plist in poss[s:e]:
+                    stream += [p if i == 0 else p - plist[i - 1]
+                               for i, p in enumerate(plist)]
+                row["positions"] = _ref_varints(stream)
+            rows.append(row)
+    return pd.DataFrame(rows)
+
+
+# values on both sides of every LEB128 length step the inputs must cross
+_EDGES = [0, 1, 127, 128, 2**14 - 1, 2**14, 2**35 - 1, 2**35, 2**40]
+
+
+@st.composite
+def _postings(draw):
+    """Sorted (term, doc_id, tf, dl[, positions]) runs: several terms,
+    run lengths at and around the 128-posting block size, doc gaps, tfs,
+    dls and position gaps crossing 2^7, 2^14 and 2^35."""
+    import pandas as pd
+
+    rnd = draw(st.randoms(use_true_random=False))
+    with_pos = draw(st.booleans())
+    lens = draw(st.lists(st.sampled_from([1, 2, 127, 128, 129, 256])
+                         | st.integers(1, 300), min_size=1, max_size=4))
+    rows = []
+    for t, n in enumerate(lens):
+        doc = rnd.choice(_EDGES)
+        for _ in range(n):
+            tf = rnd.choice([1, 2, 127, 128, 2**14, 2**30])
+            row = [f"t{t}", doc, tf, rnd.choice(_EDGES[1:])]
+            if with_pos:
+                p, plist = -1, []
+                for _ in range(rnd.randint(0, 4)):
+                    p += rnd.choice([1, 127, 128, 2**14, 2**20])
+                    plist.append(p)
+                row.append(plist)
+            rows.append(row)
+            doc += rnd.choice(_EDGES[1:])
+    cols = ["term", "doc_id", "tf", "dl"] + (["positions"] if with_pos else [])
+    df = pd.DataFrame(rows, columns=cols)
+    cuts = sorted(set(draw(st.lists(st.integers(1, max(1, len(df) - 1)),
+                                    max_size=5))))
+    bounds = [0] + [c for c in cuts if c < len(df)] + [len(df)]
+    return df, [b - a for a, b in zip(bounds, bounds[1:])]
+
+
+@settings(deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@given(_postings())
+def test_block_kernel_matches_reference_bytes(case):
+    """The vectorized kernel's blocks equal the per-term reference
+    encoder's byte for byte, however the input is cut into batches."""
+    df, sizes = case
+    got = _encode(_arrow_batches(df, sizes))
+    ref = _ref_encode(df)
+    assert list(got.columns) == list(ref.columns)
+    for c in ref.columns:
+        assert got[c].tolist() == ref[c].tolist(), c
+
+
+@given(st.lists(st.integers(min_value=0, max_value=2**62), max_size=300))
+def test_vectorized_varint_decode_matches_reference(vals):
+    from prosearch_spark.index.blocks import _decode_np
+
+    buf = _ref_varints(vals)
+    assert encode_varints(vals) == buf
+    assert _decode_np(buf).tolist() == decode_varints(buf) == vals
+
+
 @given(st.lists(
     st.tuples(st.integers(0, 2**40), st.integers(1, 1000),
               st.integers(1, 10**6)),
@@ -71,15 +206,12 @@ def test_block_cut_covers_all_postings(rows):
     across blocks, sorted, with correct metadata."""
     import pandas as pd
 
-    from prosearch_spark.index.blocks import _encode_partition, decode_varints
-
     df = pd.DataFrame(
         sorted({r[0]: r for r in rows}.values()),
         columns=["doc_id", "tf", "dl"],
     )
     df.insert(0, "term", "t")
-    out = list(_encode_partition(iter([df])))
-    blocks = pd.concat(out) if out else pd.DataFrame()
+    blocks = _encode(_arrow_batches(df))
     got = []
     for b in blocks.itertuples(index=False):
         docs = decode_varints(b.docs)
@@ -103,15 +235,13 @@ def test_block_cut_batch_boundary_invariance(doc_ids, n_chunks):
     splits yields identical blocks (the cross-batch carry logic)."""
     import pandas as pd
 
-    from prosearch_spark.index.blocks import _encode_partition
-
     ids = sorted(set(doc_ids))
     df = pd.DataFrame({"term": "t", "doc_id": ids,
                        "tf": [1] * len(ids), "dl": [7] * len(ids)})
-    whole = pd.concat(list(_encode_partition(iter([df])))).reset_index(drop=True)
+    whole = _encode(_arrow_batches(df))
     size = max(1, len(df) // n_chunks)
-    chunks = [df.iloc[i:i + size] for i in range(0, len(df), size)]
-    split = pd.concat(list(_encode_partition(iter(chunks)))).reset_index(drop=True)
+    sizes = [min(size, len(df) - i) for i in range(0, len(df), size)]
+    split = _encode(_arrow_batches(df, sizes))
     assert whole.equals(split)
 
 
