@@ -33,9 +33,10 @@ partitions simply yields several independent block runs —
 semantically equivalent, and each task's memory is bounded by its
 partition, not by the term.
 
-Decode is the inverse ``mapInPandas`` with a vectorized LEB128 decode
-per buffer (``_decode_np``); both directions are Arrow-batched (no
-per-row Python UDFs). ``decode_varints`` is the pure-Python reference
+Decode is the inverse ``mapInPandas``: each binary column of a batch
+decodes as one concatenated LEB128 stream (``_decode_np``) and
+per-block running sums restore absolute doc ids and positions — no
+per-block loop either. ``decode_varints`` is the pure-Python reference
 decoder.
 """
 
@@ -277,55 +278,43 @@ def _encode_partition(batches: Iterator[pa.RecordBatch]
         yield out
 
 
+def _segment_cumsum(vals: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Running sums of ``vals`` that restart at every segment of ``lens``."""
+    cs = np.concatenate(([0], np.cumsum(vals)))
+    return cs[1:] - np.repeat(cs[np.cumsum(lens) - lens], lens)
+
+
 def _decode_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """Block rows -> postings, one batch at a time: each binary column
+    of the batch decodes as ONE concatenated LEB128 stream (a block's
+    values are the next ``n`` of it), so there is no per-block loop."""
     for batch in batches:
         with_pos = "positions" in batch.columns
         # `seg` is an opaque per-block passthrough tag (the live
         # segment-stack view labels each block with its source segment
         # so per-segment tombstones can anti-join after decode)
         with_seg = "seg" in batch.columns
-        terms: list = []
-        docs: list = []
-        tfs: list = []
-        dls: list = []
-        poss: list = []
-        segs: list = []
-        for r in batch.itertuples(index=False):
-            deltas = _decode_np(r.docs)
-            # first stored delta is 0, so cumsum + first_doc restores
-            # absolute ids in one vector op
-            docs.append(deltas.cumsum() + r.first_doc)
-            tf_arr = _decode_np(r.tfs)
-            tfs.append(tf_arr)
-            dls.append(_decode_np(r.dls))
-            terms.append(np.repeat(np.array([r.term], dtype=object), r.n))
-            if with_seg:
-                segs.append(np.repeat(np.array([r.seg], dtype=object), r.n))
-            if with_pos:
-                stream = _decode_np(r.positions)
-                off = 0
-                for cnt in tf_arr:
-                    seg = stream[off:off + cnt]
-                    poss.append(seg.cumsum().astype("int32").tolist())
-                    off += cnt
-        if not terms:
-            cols = {"term": [], "doc_id": [], "tf": [], "dl": []}
-            if with_pos:
-                cols["positions"] = []
-            if with_seg:
-                cols["seg"] = []
-            yield pd.DataFrame(cols)
-            continue
+        n = batch["n"].to_numpy(dtype=np.int64)
+        tf = _decode_np(b"".join(batch["tfs"]))
+        # first stored delta is 0, so a per-block running sum plus
+        # first_doc restores absolute ids
         out = {
-            "term": np.concatenate(terms),
-            "doc_id": np.concatenate(docs),
-            "tf": np.concatenate(tfs),
-            "dl": np.concatenate(dls),
+            "term": np.repeat(batch["term"].to_numpy(dtype=object), n),
+            "doc_id": _segment_cumsum(_decode_np(b"".join(batch["docs"])), n)
+            + np.repeat(batch["first_doc"].to_numpy(dtype=np.int64), n),
+            "tf": tf,
+            "dl": _decode_np(b"".join(batch["dls"])),
         }
         if with_pos:
-            out["positions"] = poss
+            # per posting: first position absolute, then gaps; tf
+            # delimits the stream
+            pos = _segment_cumsum(_decode_np(b"".join(batch["positions"])),
+                                  tf).astype(np.int32)
+            out["positions"] = [p.tolist() for p in
+                                np.split(pos, np.cumsum(tf)[:-1])] \
+                if tf.size else []
         if with_seg:
-            out["seg"] = np.concatenate(segs)
+            out["seg"] = np.repeat(batch["seg"].to_numpy(dtype=object), n)
         yield pd.DataFrame(out)
 
 

@@ -187,6 +187,36 @@ def test_block_kernel_matches_reference_bytes(case):
         assert got[c].tolist() == ref[c].tolist(), c
 
 
+@settings(deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@given(_postings(), st.integers(0, 10**6), st.booleans())
+def test_block_decode_roundtrips_postings(case, cut, with_seg):
+    """Encode then decode returns every posting exactly, positions
+    included, and passes a per-block ``seg`` tag through to each of the
+    block's postings, wherever the blocks are cut into decode batches."""
+    import numpy as np
+    import pandas as pd
+
+    from prosearch_spark.index.blocks import _decode_partition
+
+    df, sizes = case
+    if "positions" in df.columns:
+        # a posting's tf is its position count (tf delimits the stream)
+        df["positions"] = [p or [0] for p in df["positions"]]
+        df["tf"] = [len(p) for p in df["positions"]]
+    blocks = _encode(_arrow_batches(df, sizes))
+    if with_seg:
+        blocks["seg"] = [f"s{i % 3}" for i in range(len(blocks))]
+    cut %= len(blocks) + 1
+    parts = [blocks.iloc[:cut].reset_index(drop=True),
+             blocks.iloc[cut:].reset_index(drop=True)]
+    got = pd.concat(list(_decode_partition(iter(parts))), ignore_index=True)
+    for c in df.columns:
+        assert got[c].tolist() == df[c].tolist(), c
+    if with_seg:
+        assert got["seg"].tolist() == \
+            np.repeat(blocks["seg"].to_numpy(), blocks["n"]).tolist()
+
+
 @given(st.lists(st.integers(min_value=0, max_value=2**62), max_size=300))
 def test_vectorized_varint_decode_matches_reference(vals):
     from prosearch_spark.index.blocks import _decode_np
